@@ -338,6 +338,25 @@ def batch_digest(staged: DataFrame, seq_col: str = "seq") -> str:
     return format((s or 0) & 0xFFFFFFFFFFFFFFFF, "016x")
 
 
+def append_guard(table, salted, resolve):
+    """Return ``(append_mode, salted, resolve)`` for a write into
+    ``table``. Append-only fact tables take every event AS a row — any
+    latest-wins pre-shrink (salted or keys-first) would silently drop
+    facts, so both knobs are inert there (the append write path's one
+    repartition has no reduce-side sort to protect): explicit
+    ``salted=True`` / ``resolve="keys_first"`` raise, and the "auto"
+    forms resolve to no dedup."""
+    append_mode = table.manifest().get("write_mode", "cow") == "append"
+    if append_mode:
+        if salted is True or resolve == "keys_first":
+            raise ValueError(
+                "append-only tables take every event as a row; "
+                "salted/keys_first dedup would drop facts"
+            )
+        salted, resolve = False, "fused"
+    return append_mode, salted, resolve
+
+
 def apply_batch(
     table,
     events: DataFrame,
@@ -388,19 +407,9 @@ def apply_batch(
     fail-fast single-writer behavior."""
     from etl_spark.lake.table import with_conflict_retry
 
-    # append-only fact tables take every event AS a row — any
-    # latest-wins pre-shrink (salted or keys-first) would silently
-    # drop facts, so both knobs are inert there (the append write
-    # path's one repartition has no reduce-side sort to protect),
-    # and the staged path below (which dedups) is bypassed entirely
-    append_mode = table.manifest().get("write_mode", "cow") == "append"
-    if append_mode:
-        if salted is True or resolve == "keys_first":
-            raise ValueError(
-                "append-only tables take every event as a row; "
-                "salted/keys_first dedup would drop facts"
-            )
-        salted, resolve = False, "fused"
+    # the staged path below (which dedups) is bypassed entirely on
+    # append-only tables
+    append_mode, salted, resolve = append_guard(table, salted, resolve)
 
     decision = None
     salt_buckets = 32

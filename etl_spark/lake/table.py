@@ -26,10 +26,11 @@ needs:
 
 Merge conflict resolution is *latest-wins by a sequence column*
 (CDC semantics): union(target, source) -> one repartition on the key
-columns -> window row_number by seq desc -> keep rn=1; deletes stay as
-hidden tombstone rows. The single repartition both clusters keys for
-the window AND places each row in its output bucket, so the whole
-merge moves the payload through exactly one shuffle (see
+columns into a divisor of n_buckets (_pack_buckets) -> window
+row_number by seq desc over (bucket, keys) -> keep rn=1; deletes stay
+as hidden tombstone rows. The single repartition both clusters keys
+for the window AND places each bucket whole in one write task, so the
+whole merge moves the payload through exactly one shuffle (see
 _merge_resolve for the measured alternatives). An explicit salted
 two-phase dedup variant lives in etl_spark.cdc.replay for extreme
 hot-key batches.
@@ -86,6 +87,15 @@ _STATS_TYPES = (
 )
 
 _FILTER_OPS = {"=", "==", "<", "<=", ">", ">=", "between", "in"}
+
+# Most input rows one packed bucket-write task takes on (_pack_buckets).
+# Measured on a 4-core host, 64 buckets, bench.py's CDC replay: three
+# 100k-event epochs (up to ~25k rows per task packed 8 ways) ran 12-24%
+# faster packed than as 64 tasks; one 3M-event epoch packed 8 ways
+# (375k rows per task) ran 12% slower (one run). 100k rows is near the
+# geometric middle; the same 3M epoch cut into 32 tasks ran as fast as
+# 64 at local[8].
+_PACK_ROWS_PER_TASK = 100_000
 
 
 def _stat_encode(v):
@@ -567,12 +577,64 @@ class LakeTable:
 
     # ---------- read ----------
 
-    def _bucket_expr(self, keys: list[str]):
-        # pmod(murmur3, n) — EXACTLY Spark's HashPartitioning formula,
-        # so repartition(n_buckets, *keys) physically routes each row
-        # to the partition that IS its bucket: the merge's one shuffle
-        # doubles as the bucketed-write placement (no second shuffle).
-        return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(self.n_buckets))
+    def _bucket_expr(self, keys: list[str], n_buckets: int | None = None):
+        # pmod(murmur3, n), Spark's own HashPartitioning formula. Bucket
+        # ids are recorded in every manifest, so the formula is fixed;
+        # which task writes a bucket is decided per write by
+        # _pack_buckets.
+        return F.pmod(F.hash(*[F.col(k) for k in keys]),
+                      F.lit(n_buckets or self.n_buckets))
+
+    def _pack_buckets(self, df: DataFrame, rows: int | None,
+                      n_buckets: int | None = None) -> DataFrame:
+        """Hash-partition ``df`` on the key columns into P partitions,
+        P a divisor of n_buckets. Because P divides n_buckets,
+        pmod(h, P) == pmod(h, n_buckets) mod P: bucket b lands whole in
+        task b mod P, every task holds exactly n_buckets / P buckets,
+        and each bucket is still written as one file (per
+        ``target_file_rows``). A window over (bucket, *keys) is
+        satisfied by this partitioning, so the merge resolve keeps its
+        single Exchange.
+
+        P is the smallest divisor of n_buckets that is at least
+        min(n_buckets, defaultParallelism) and at least ``rows`` /
+        _PACK_ROWS_PER_TASK. A small epoch runs one wave of core-sized
+        tasks: a 64-bucket rewrite of ~25k input rows on 4 cores is 4
+        tasks, not 64 tasks of ~0.16 s fixed cost each (measured on a
+        4-core host). A large epoch keeps up to n_buckets tasks, whose
+        sorts stay small, whatever the number of executors registered
+        when it starts. ``rows`` is the write's input row count;
+        None takes Catalyst's estimate for ``df`` (no job): its row
+        count, or its size over its row width (8 + defaultSize, as in
+        Catalyst's own getSizePerRow)."""
+        n = n_buckets or self.n_buckets
+        if rows is None:
+            st = df._jdf.queryExecution().optimizedPlan().stats()
+            rows = (int(str(st.rowCount().get())) if st.rowCount().isDefined()
+                    else int(str(st.sizeInBytes())) // (8 + df._jdf.schema().defaultSize()))
+        want = max(min(n, self.spark.sparkContext.defaultParallelism),
+                   -(-rows // _PACK_ROWS_PER_TASK))
+        p = next((d for d in range(1, n + 1) if n % d == 0 and d >= want), n)
+        return df.repartition(p, *[F.col(k) for k in self.key_cols])
+
+    @staticmethod
+    def _stored_rows(m: dict, buckets=None) -> int:
+        """Rows (live + tombstones) manifest ``m`` records for
+        ``buckets`` (all when None), base and deltas: the input size of
+        a rewrite of those buckets, known without a Spark job."""
+        return sum(
+            e.get("rows", 0) + e.get("tombstones", 0)
+            for layer in (m["buckets"], *[d["buckets"] for d in m.get("deltas", [])])
+            for b, e in layer.items()
+            if buckets is None or int(b) in buckets
+        )
+
+    def _read_written(self, path: str, schema: T.StructType) -> DataFrame:
+        """Read back a bucket-partitioned directory this process just
+        wrote, with the schema it was written with plus the partition
+        column: no footer schema-inference job."""
+        full = T.StructType([*schema.fields, T.StructField(_BUCKET, T.IntegerType(), True)])
+        return self.spark.read.schema(full).parquet(path)
 
     def version_at(self, ts: float) -> int:
         """TIMESTAMP AS OF: the newest version whose commit time is
@@ -1124,20 +1186,23 @@ class LakeTable:
     # ---------- write paths ----------
 
     def _write_buckets(
-        self, df: DataFrame, version: int, schema: T.StructType, pre_partitioned: bool = False
+        self, df: DataFrame, version: int, schema: T.StructType,
+        pre_partitioned: bool = False, n_buckets: int | None = None,
+        rows: int | None = None,
     ) -> dict:
         """Write df (must contain _b) partitioned by bucket; return
         {bucket: {path, rows}} with per-bucket row counts.
 
-        Repartition by bucket BEFORE partitionBy: without it every
-        input partition writes one file per bucket it touches
+        Pack by bucket (_pack_buckets) BEFORE partitionBy: without it
+        every input partition writes one file per bucket it touches
         (input_partitions x n_buckets tiny files — measured to make
-        32 cores slower than 8); with it each bucket is one file and
-        file count is bounded by n_buckets regardless of parallelism.
-        Callers whose df is already hash-partitioned on the key
-        columns (the merge path) pass pre_partitioned=True and skip
-        the extra shuffle entirely (bucket id == partition id by
-        construction of _bucket_expr).
+        32 cores slower than 8); with it each bucket lands whole in
+        one task, so each bucket is one file and file count is bounded
+        by n_buckets regardless of parallelism. Callers whose df is
+        already packed (the merge path) pass pre_partitioned=True and
+        skip the extra shuffle. ``n_buckets`` is the layout's bucket
+        count when it differs from the table's (rebucket); ``rows`` is
+        df's row count, when known, for the packing.
 
         The directory is unique PER ATTEMPT (v{N}-{token}), not per
         version: optimistic concurrency is decided later by the
@@ -1153,9 +1218,10 @@ class LakeTable:
         ordered = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         out_df = df.select(F.col(_BUCKET), *ordered)
         if not pre_partitioned:
-            out_df = out_df.repartition(self.n_buckets, F.col(_BUCKET))
-        # within-file clustering (see create's sort_cols): partition ==
-        # bucket on both paths here, so this is a per-bucket local sort
+            out_df = self._pack_buckets(out_df, rows, n_buckets)
+        # within-file clustering (see create's sort_cols): a task holds
+        # whole buckets, so sorting by (bucket, sort_cols) within it
+        # sorts each bucket's one file
         sort_cols = [c for c in self.manifest().get("sort_cols", [])
                      if c in schema.names]
         if sort_cols:
@@ -1183,7 +1249,7 @@ class LakeTable:
         # sorted within each file by construction, so these are tight
         # ranges and `read(filters=...)` prunes files before the scan.
         if out:
-            back = self.spark.read.parquet(data_dir)
+            back = self._read_written(data_dir, schema)
             dead = (
                 F.coalesce(F.col(_DELETED), F.lit(False))
                 if _DELETED in back.columns
@@ -1275,9 +1341,6 @@ class LakeTable:
             if int(b) in file_stats:
                 ent["files"] = sorted(file_stats[int(b)], key=lambda fe: fe["name"])
         return out
-
-    def _bucket_keys_expr(self, schema: T.StructType):
-        return F.pmod(F.hash(*[F.col(k) for k in self.key_cols]), F.lit(self.n_buckets))
 
     def _apply_write_options(self, writer):
         """Per-column parquet bloom filters for the manifest's
@@ -1460,11 +1523,12 @@ class LakeTable:
         base+deltas by seq; ``compact()`` folds deltas into the base."""
         seq = self.seq_col
         append_only = m.get("write_mode", "cow") == "append"
-        part = src.repartition(self.n_buckets, *[F.col(k) for k in self.key_cols])
+        part = self._pack_buckets(src, None)  # no probe job: Catalyst's estimate
         # append mode skips the latest-wins resolve entirely: no sort,
         # no window — the one repartition (bucket placement/locality)
         # is the batch's only wide transform
-        kept = part if append_only else self._resolve_latest(part, seq, self.key_cols)
+        kept = (part if append_only
+                else self._resolve_latest(part, seq, [_BUCKET, *self.key_cols]))
         live = ~F.coalesce(F.col(_DELETED), F.lit(False))
         for dst, (fn, srccol) in m.get("derived", {}).items():
             if fn != "sha256":
@@ -1498,7 +1562,7 @@ class LakeTable:
         # file's sort-column min/max — in append mode (no read-time
         # resolve) `read(filters=...)` prunes delta files with them.
         if out:
-            back = self.spark.read.parquet(delta_dir)
+            back = self._read_written(delta_dir, new_schema)
             dead = (
                 F.coalesce(F.col(_DELETED), F.lit(False))
                 if _DELETED in back.columns else F.lit(False)
@@ -1636,7 +1700,8 @@ class LakeTable:
                 version=m0["version"], buckets=touched, include_tombstones=True
             ).withColumn(_BUCKET, self._bucket_expr(self.key_cols))
             schema = T.StructType.fromJson(m0["schemas"][m0["current_schema_id"]])
-            written = self._write_buckets(resolved, m0["version"] + 1, schema)
+            written = self._write_buckets(resolved, m0["version"] + 1, schema,
+                                          rows=self._stored_rows(m0, touched))
             for ent in written.values():
                 ent["sid"] = m0["current_schema_id"]
             while True:
@@ -1667,7 +1732,8 @@ class LakeTable:
         # max seq (collect_set is bounded by n_buckets) — the manifest
         # tracks max_seq so upsert() never scans the table for it
         probe = src.agg(
-            F.collect_set(F.col(_BUCKET)).alias("bs"), F.max(F.col(seq)).alias("mx")
+            F.collect_set(F.col(_BUCKET)).alias("bs"), F.max(F.col(seq)).alias("mx"),
+            F.count(F.lit(1)).alias("n"),
         ).first()
         dirty = {int(b) for b in probe["bs"]}
         max_seq = _max_opt(m.get("max_seq"), probe["mx"])
@@ -1696,13 +1762,13 @@ class LakeTable:
         all_cols = [f.name for f in new_schema.fields] + [_BUCKET]
         union = target.select(*all_cols).unionByName(src.select(*all_cols))
         # latest-wins via ONE key-hash shuffle + Tungsten binary sort:
-        # repartition(n_buckets, keys) both clusters each key (so the
-        # window needs no further exchange — HashPartitioning on the
-        # keys satisfies its distribution) and places every row in the
-        # partition that IS its output bucket (see _bucket_expr), so
-        # the bucketed write below shuffles nothing. Catalyst turns the
-        # rn=1 filter into WindowGroupLimit (top-1 per key during the
-        # sort). A max_by(struct) aggregate computes the same thing but
+        # _pack_buckets both clusters each key (HashPartitioning on the
+        # keys satisfies the window over (_b, *keys)) and places every
+        # bucket whole in one write task, so the bucketed write below
+        # shuffles nothing; sorting by _b first also hands the write its
+        # rows grouped by bucket. Catalyst turns the rn=1 filter into
+        # WindowGroupLimit (top-1 per key during the sort). A
+        # max_by(struct) aggregate computes the same thing but
         # via ObjectHashAggregate heap buffers — measured to GC-thrash
         # and anti-scale beyond ~8 threads on wide string payloads.
         # Alternative considered and measured: omitting the repartition
@@ -1713,15 +1779,9 @@ class LakeTable:
         # (one reducer sorts it; measured no slowdown). For extreme
         # skew beyond that, apply_batch(salted=True) pre-shrinks hot
         # keys with the two-phase salted reduction.
-        from pyspark.sql import Window
-
-        part = union.repartition(self.n_buckets, *[F.col(k) for k in self.key_cols])
-        w = Window.partitionBy(*self.key_cols).orderBy(F.desc(seq))
-        kept = (
-            part.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        kept = self._resolve_latest(
+            self._pack_buckets(union, self._stored_rows(m, dirty) + probe["n"]),
+            seq, [_BUCKET, *self.key_cols])
         # derived columns (e.g. content checksums) are computed for
         # WINNER rows only — with the fused raw-event merge this does
         # ~1/events-per-key the hashing of a stage-then-merge design
@@ -1810,7 +1870,7 @@ class LakeTable:
         matched = df.filter(condition)
         dirty = {
             int(r["b"])
-            for r in matched.select(self._bucket_keys_expr(self.schema()).alias("b")).distinct().collect()
+            for r in matched.select(self._bucket_expr(self.key_cols).alias("b")).distinct().collect()
         }
         if not dirty:
             return self.current_version()
@@ -1821,7 +1881,8 @@ class LakeTable:
         )
         v = m["version"] + 1
         schema = self.schema()
-        written = self._write_buckets(keep.withColumn(_BUCKET, self._bucket_expr(self.key_cols)), v, schema)
+        written = self._write_buckets(keep.withColumn(_BUCKET, self._bucket_expr(self.key_cols)),
+                                      v, schema, rows=self._stored_rows(m, dirty))
         for ent in written.values():
             ent["sid"] = m["current_schema_id"]
         new_buckets = dict(m["buckets"])
@@ -2333,50 +2394,17 @@ class LakeTable:
         if self.manifest().get("deltas"):
             self.compact()  # fold deltas before changing the layout
         m = self.manifest()
-        schema = self.schema()
-        df = self.read(include_tombstones=True)
         v = m["version"] + 1
-        new_b = F.pmod(F.hash(*[F.col(k) for k in self.key_cols]), F.lit(n_buckets))
-        data_dir = os.path.join(self.root, "data", f"v{v}-{uuid.uuid4().hex[:8]}")
-        ordered = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        # _apply_write_options: bloom_cols must survive layout rewrites
-        # (a rebucket that dropped them would silently degrade point
-        # lookups until later merges happened to rewrite every bucket)
-        self._apply_write_options(
-            df.withColumn(_BUCKET, new_b).select(F.col(_BUCKET), *ordered)
-            .repartition(n_buckets, F.col(_BUCKET))
-            .write
-        ).partitionBy(_BUCKET).mode("overwrite").parquet(data_dir)
-        out = {}
-        for d in os.listdir(data_dir):
-            if d.startswith(f"{_BUCKET}="):
-                b = int(d.split("=")[1])
-                out[str(b)] = {"path": os.path.join(data_dir, d), "sid": m["current_schema_id"]}
-        if out:
-            back = self.spark.read.parquet(data_dir)
-            dead = F.coalesce(F.col(_DELETED), F.lit(False))
-            seq_col = self.seq_col
-            sel = [F.col(_BUCKET).alias("b"), dead.alias("d"),
-                   F.col(seq_col).alias("__seq")]
-            aggs = [
-                F.count(F.when(~F.col("d"), 1)).alias("live"),
-                F.count(F.when(F.col("d"), 1)).alias("dead"),
-                F.min("__seq").alias("mn"), F.max("__seq").alias("mx"),
-            ]
-            if _CV in back.columns:
-                sel.append(F.col(_CV).alias("__cv"))
-                aggs.append(F.max("__cv").alias("cv"))
-            counts = {
-                int(r["b"]): r.asDict()
-                for r in back.select(*sel).groupBy("b").agg(*aggs).collect()
-            }
-            for b, ent in out.items():
-                r = counts.get(int(b), {})
-                ent["rows"], ent["tombstones"] = int(r.get("live", 0)), int(r.get("dead", 0))
-                if r.get("mx") is not None:
-                    ent["min_seq"], ent["max_seq"] = int(r["mn"]), int(r["mx"])
-                if r.get("cv") is not None:
-                    ent["max_cv"] = int(r["cv"])
+        # the shared bucketed write keeps bloom_cols, sort_cols
+        # clustering and per-file stats across the layout change (a
+        # rebucket that dropped them would silently degrade lookups and
+        # file pruning until later merges rewrote every bucket)
+        df = self.read(include_tombstones=True).withColumn(
+            _BUCKET, self._bucket_expr(self.key_cols, n_buckets))
+        out = self._write_buckets(df, v, self.schema(), n_buckets=n_buckets,
+                                  rows=self._stored_rows(m))
+        for ent in out.values():
+            ent["sid"] = m["current_schema_id"]
         m2 = {**m, "version": v, "parent": m["version"], "n_buckets": n_buckets,
               "buckets": out, "committed_at": time.time(), "note": f"rebucket->{n_buckets}"}
         return self._commit(m2)
@@ -2399,7 +2427,7 @@ class LakeTable:
         )
         dirty = {
             int(r["b"])
-            for r in purgeable.select(self._bucket_keys_expr(self.schema()).alias("b"))
+            for r in purgeable.select(self._bucket_expr(self.key_cols).alias("b"))
             .distinct().collect()
         }
         if not dirty:
@@ -2411,7 +2439,8 @@ class LakeTable:
         v = m["version"] + 1
         schema = self.schema()
         written = self._write_buckets(
-            keep.withColumn(_BUCKET, self._bucket_expr(self.key_cols)), v, schema
+            keep.withColumn(_BUCKET, self._bucket_expr(self.key_cols)), v, schema,
+            rows=self._stored_rows(m, dirty),
         )
         for ent in written.values():
             ent["sid"] = m["current_schema_id"]

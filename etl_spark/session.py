@@ -48,6 +48,14 @@ def get_spark(
                 os.environ.get("SPARK_DRIVER_JAVA_OPTS", ""))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # list up to 1024 paths on the driver instead of in a Spark
+        # job. A table read passes one path per bucket dir (n_buckets x
+        # (1 + deltas): a few hundred for 64 buckets under the replay
+        # job's maintenance defaults), a stream micro-batch one per new
+        # WAL file. Past the default threshold of 32, each such read
+        # launched a listing job of one task per path, whose scheduling
+        # cost far exceeded the directory listings it ran
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -25,6 +25,7 @@ Crash matrix:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +34,8 @@ from pyspark.sql import functions as F
 from etl_spark.cdc import replay as R
 from etl_spark.lake.table import LakeTable
 from etl_spark.sources.wal import EVENT_SCHEMA_EVOLVED, stream_event_log
+
+_log = logging.getLogger(__name__)
 
 LINEAGE_SCHEMA = "epoch long, partition_id int, seq_min long, seq_max long, row_count long, sha256_digest string"
 
@@ -161,7 +164,13 @@ class CdcStream:
         operator's maintain_all compact, a catalog txn) — the retry
         rebases on the new CURRENT; the epoch fence keeps it
         exactly-once. The stream's own maintenance runs in-loop and
-        never races itself."""
+        never races itself.
+
+        On an append-only table every event is a fact row, so the
+        stream never dedups: ``salted`` and ``resolve`` are inert
+        there, and ``salted=True`` or ``resolve="keys_first"`` raise
+        (the same guard as ``replay.apply_batch``)."""
+        self.append_only, salted, resolve = R.append_guard(table, salted, resolve)
         self.table = table
         self.checkpoint_dir = checkpoint_dir
         self.salted = salted
@@ -281,7 +290,10 @@ class CdcStream:
             # per-batch hot-key probe (keys-only sample aggregation);
             # opt-in — costs one extra tiny job per micro-batch
             salted = R.decide_salt(can)["salted"]
-        if salted:
+        if self.append_only:
+            # no dedup of any kind: every live event is a fact row
+            src = can if self.table.derived_columns else R.with_content_sha256(can)
+        elif salted:
             src = R.with_content_sha256(R.dedup_latest_salted(can))
         else:
             # wide-row escape hatch (resolve="keys_first"/"auto"): decide
@@ -396,7 +408,8 @@ class MaintenanceSidecar:
         self.compact_deltas_over = compact_deltas_over
         self.keep_versions = keep_versions
         self.compact_retries = compact_retries
-        self.stats = {"compactions": 0, "lost_races": 0, "expiries": 0}
+        self.stats = {"compactions": 0, "lost_races": 0, "expiries": 0,
+                      "errors": 0, "last_error": None}
         self._stop = None
         self._thread = None
 
@@ -422,6 +435,13 @@ class MaintenanceSidecar:
                 self.stats["lost_races"] += 1
             except FileNotFoundError:
                 pass  # manifest flipped mid-read; next tick re-reads
+            except Exception as e:
+                # a failed tick (a Spark error in the fold, an OOM) must
+                # not kill the thread silently: log it, count it, keep
+                # ticking
+                _log.exception("maintenance tick failed on %s", self.table.root)
+                self.stats["errors"] += 1
+                self.stats["last_error"] = repr(e)
             self._stop.wait(self.poll_sec)
 
     def start(self) -> "MaintenanceSidecar":
@@ -436,8 +456,12 @@ class MaintenanceSidecar:
 
     def stop(self, final_sweep: bool = False, timeout_s: float = 60.0) -> dict:
         """Stop the loop (optionally one last compact+expire for a
-        bounded-depth handoff) and return the maintenance stats."""
+        bounded-depth handoff) and return the maintenance stats.
+        ``died_early`` is True when the loop thread had already exited
+        before this call, i.e. maintenance stopped without being asked;
+        ``errors``/``last_error`` count the ticks that raised."""
         if self._thread is not None:
+            self.stats["died_early"] = not self._thread.is_alive()
             self._stop.set()
             self._thread.join(timeout=timeout_s)
             self._thread = None

@@ -1354,3 +1354,99 @@ def test_drop_table_gates_and_removes(spark, tmp_path, repos_schema):
     with pytest.raises(FileNotFoundError):
         cat.drop_table("t")
     del clone
+
+
+def test_rebucket_keeps_sort_clustering_and_file_stats(spark, tmp_path):
+    """rebucket goes through the shared bucketed write, so a sort_cols
+    table keeps its per-file sort-column stats across the layout change:
+    filtered reads still prune files, and stay exact."""
+    sch = T.StructType([
+        T.StructField("k", T.StringType(), False),
+        T.StructField("ts", T.LongType(), True),
+    ])
+    t = LakeTable.create(spark, str(tmp_path / "t"), sch, ["k"], n_buckets=2,
+                         sort_cols=["ts"], properties={"target_file_rows": 50})
+    rows = [(f"k{i}", i, "insert", i + 1) for i in range(400)]
+    t.merge_cdc(spark.createDataFrame(rows, "k string, ts long, op string, seq long"),
+                epoch=0)
+    t.rebucket(4)
+    flt = [("ts", "<", 40)]
+    assert t.scan_stats(filters=flt)["files_pruned"] > 0
+    got = sorted(r["ts"] for r in t.read(filters=flt).collect())
+    want = sorted(r["ts"] for r in t.read().filter(F.col("ts") < 40).collect())
+    assert got == want == list(range(40))
+
+
+def _max_stage_tasks(sc, group: str) -> int:
+    st = sc.statusTracker()
+    n = 0
+    for j in st.getJobIdsForGroup(group):
+        for s in st.getJobInfo(j).stageIds:
+            info = st.getStageInfo(s)
+            if info is not None:
+                n = max(n, info.numTasks)
+    return n
+
+
+def test_bucket_writes_are_sized_to_cores(spark, tmp_path):
+    """A 64-bucket merge launches work sized to the session's cores,
+    not to the bucket count: buckets are packed into at most
+    defaultParallelism write tasks, bucket dirs are listed on the
+    driver, and every written bucket is still exactly one file."""
+    sc = spark.sparkContext
+    rows = [(f"k{i}", i, "insert", i + 1) for i in range(500)]
+    src_dir = str(tmp_path / "src")
+    _src(spark, rows).coalesce(1).write.parquet(src_dir)
+    src = spark.read.parquet(src_dir)
+    assert len(src.inputFiles()) == 1
+
+    def merged(t, epoch, group):
+        sc.setJobGroup(group, group)
+        try:
+            t.merge_cdc(src.withColumn("seq", F.col("seq") + epoch * 1000), epoch=epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return t.manifest()
+
+    cow = LakeTable.create(spark, str(tmp_path / "cow"), _schema(), ["k"], n_buckets=64)
+    merged(cow, 0, "cow-insert")
+    m = merged(cow, 1, "cow-update")  # reads back ~64 target bucket dirs
+    mor = LakeTable.create(spark, str(tmp_path / "mor"), _schema(), ["k"],
+                           n_buckets=64, write_mode="mor")
+    m_mor = merged(mor, 0, "mor-delta")
+    written = [*m["buckets"].values(), *m_mor["deltas"][-1]["buckets"].values()]
+    assert len(m["buckets"]) > 32  # enough bucket dirs to trip a listing job
+    for ent in written:
+        files = [f for f in os.listdir(ent["path"]) if f.endswith(".parquet")]
+        assert len(files) == 1, ent["path"]
+    # the COW resolve's union stage scans the target (file splits sized
+    # to the cores) beside the one source file: hence the + 1
+    for group in ("cow-insert", "cow-update", "mor-delta"):
+        assert 0 < _max_stage_tasks(sc, group) <= sc.defaultParallelism + 1, group
+    assert {r["k"]: r["v"] for r in cow.read().collect()} == {f"k{i}": i for i in range(500)}
+
+
+def test_bucket_packing_is_even_and_sized_to_the_epoch(spark, tmp_path):
+    """Packed write tasks hold whole buckets, the same number each
+    (bucket b in task b mod P); a large epoch keeps one task per
+    bucket; without a row count the packing uses Catalyst's estimate."""
+    from etl_spark.lake.table import _PACK_ROWS_PER_TASK
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), _schema(), ["k"], n_buckets=64)
+    df = (spark.range(20000)
+          .select(F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"))
+          .withColumn("_b", t._bucket_expr(t.key_cols)))
+    by_task: dict[int, set] = {}
+    for r in (t._pack_buckets(df, 20000).select(F.spark_partition_id().alias("p"), "_b")
+              .distinct().collect()):
+        by_task.setdefault(r["p"], set()).add(r["_b"])
+    p = spark.sparkContext.defaultParallelism
+    assert sorted(by_task) == list(range(p))
+    for task, buckets in by_task.items():
+        assert buckets == {b for b in range(64) if b % p == task}
+    assert t._pack_buckets(df, 64 * _PACK_ROWS_PER_TASK).rdd.getNumPartitions() == 64
+    # 10x the per-task budget: the smallest divisor of 64 that is >= 10
+    assert t._pack_buckets(df, 10 * _PACK_ROWS_PER_TASK).rdd.getNumPartitions() == 16
+    assert t._pack_buckets(df, None).rdd.getNumPartitions() == p
+    big = spark.range(20 * _PACK_ROWS_PER_TASK).select(F.col("id").cast("string").alias("k"))
+    assert t._pack_buckets(big, None).rdd.getNumPartitions() > p

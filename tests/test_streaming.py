@@ -352,3 +352,48 @@ def test_maintenance_sidecar_drains_stall_free(spark, wal, oracle, repos_schema,
     pd.testing.assert_frame_equal(_final(tbl), oracle, check_dtype=False)
     with pytest.raises(RuntimeError):
         MaintenanceSidecar(tbl).start().start()
+
+
+def test_stream_into_append_table_keeps_every_event(spark, repos_schema, tmp_path):
+    """An append-only table takes every event as a row, so the stream
+    never dedups into one: duplicate-key rows all survive, and a dedup
+    knob that would drop facts is refused up front."""
+    wal = str(tmp_path / "wal_facts")
+    ev = generate_events(spark, 800).filter(F.lower("op") != "delete")
+    ev.coalesce(1).write.parquet(wal)
+    n, n_keys = ev.count(), ev.select("repo", "path").distinct().count()
+    assert n > n_keys
+    tbl = LakeTable.create(spark, str(tmp_path / "facts"), repos_schema,
+                           ["repo", "path"], n_buckets=4, write_mode="append")
+    with pytest.raises(ValueError, match="append-only"):
+        CdcStream(tbl, str(tmp_path / "ckpt_kf"), resolve="keys_first")
+    with pytest.raises(ValueError, match="append-only"):
+        CdcStream(tbl, str(tmp_path / "ckpt_salt"), salted=True)
+    CdcStream(tbl, str(tmp_path / "ckpt"), salted="auto").run_to_completion(spark, wal)
+    assert tbl.read().count() == n
+
+
+def test_maintenance_sidecar_counts_errors_and_keeps_ticking(spark, repos_schema, tmp_path):
+    """A tick that raises is counted, with its error kept, and the loop
+    keeps running instead of dying silently."""
+    import time as _time
+
+    from etl_spark.streaming.driver import MaintenanceSidecar
+
+    tbl = LakeTable.create(spark, str(tmp_path / "repos"), repos_schema,
+                           ["repo", "path"], n_buckets=4, write_mode="mor")
+    src = "repo string, path string, commit string, lang string, content string, op string, seq long"
+    tbl.merge_cdc(spark.createDataFrame([("r", "p", "c", "py", "x", "insert", 1)], src), epoch=0)
+
+    def boom():
+        raise RuntimeError("injected compact failure")
+
+    tbl.compact = boom
+    side = MaintenanceSidecar(tbl, poll_sec=0.05, compact_deltas_over=0).start()
+    deadline = _time.time() + 30
+    while side.stats["errors"] < 3 and _time.time() < deadline:
+        _time.sleep(0.05)
+    stats = side.stop()
+    assert stats["errors"] >= 3  # several ticks ran after the first failure
+    assert "injected compact failure" in stats["last_error"]
+    assert stats["died_early"] is False

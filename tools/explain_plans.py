@@ -3,7 +3,7 @@ ASSERT the plan properties that matter at 100 TB:
 
 - parquet scans carry PushedFilters + pruned ReadSchema;
 - the merge resolve has exactly ONE Exchange for the payload
-  (repartition-by-key), and the bucketed write adds none;
+  (whole buckets packed into tasks), and the bucketed write adds none;
 - small dims broadcast (BroadcastHashJoin) in star joins;
 - whole-stage codegen covers the hot expressions.
 
@@ -77,7 +77,9 @@ def main() -> int:
         failures.append("q2: no broadcast join")
     sections.append(("Star join: broadcast dims", p2, checks2))
 
-    # 3. merge resolve: single Exchange, window satisfied by repartition
+    # 3. merge resolve: single Exchange on the key columns, window
+    # satisfied by it. Built with the engine's own helpers, in the order
+    # _merge_resolve applies them (align, bucket id, pack, resolve).
     from etl_spark.cdc.generator import generate_events
     from etl_spark.cdc.replay import canonicalize
     from etl_spark.lake.table import LakeTable
@@ -89,8 +91,6 @@ def main() -> int:
     tbl = LakeTable.create(spark, os.path.join(root, "t"), schema, ["repo", "path"],
                            n_buckets=16, derived={"content_sha256": ("sha256", "content")})
     ev = canonicalize(generate_events(spark, 10000)).drop("ts")
-    # reproduce the resolve plan exactly as merge_cdc builds it
-    from pyspark.sql import Window
     seq = tbl.seq_col
     src = (ev.withColumn(seq, F.col("seq").cast("long"))
              .withColumn("_deleted", F.lower(F.col("op")) == "delete"))
@@ -98,21 +98,31 @@ def main() -> int:
         (F.col(f.name) if f.name in src.columns else F.lit(None).cast(f.dataType)).alias(f.name)
         for f in tbl.schema().fields
     ]
-    src = src.select(*aligned).withColumn("_b", F.pmod(F.hash("repo", "path"), F.lit(16)))
-    part = src.repartition(16, F.col("repo"), F.col("path"))
-    w = Window.partitionBy("repo", "path").orderBy(F.desc(seq))
-    kept = part.withColumn("rn", F.row_number().over(w)).filter("rn = 1").drop("rn")
+    src = src.select(*aligned).withColumn("_b", tbl._bucket_expr(tbl.key_cols))
+    kept = tbl._resolve_latest(tbl._pack_buckets(src, 10000), seq, ["_b", *tbl.key_cols])
     p3 = plan_of(kept)
     checks3 = []
-    n_exchange = len(re.findall(r"\(\d+\) Exchange", p3))
-    if n_exchange == 1:
-        checks3.append("OK exactly one Exchange (repartition doubles as window clustering "
-                       "AND bucket placement)")
+    exchanges = re.findall(r"\(\d+\) Exchange\n.*?Arguments: ([^\n]+)", p3, re.S)
+    if len(exchanges) == 1:
+        checks3.append("OK exactly one Exchange (bucket packing doubles as window "
+                       "clustering AND bucket placement)")
     else:
-        failures.append(f"merge resolve: expected 1 Exchange, saw {n_exchange}")
+        failures.append(f"merge resolve: expected 1 Exchange, saw {len(exchanges)}")
+    # the packed Exchange hashes the key columns into P partitions, P a
+    # divisor of n_buckets: bucket b lands whole in task b mod P
+    packed = exchanges and re.match(r"hashpartitioning\(repo#\d+, path#\d+, (\d+)\)",
+                                    exchanges[0])
+    if packed and 16 % int(packed.group(1)) == 0:
+        checks3.append(f"OK the Exchange is {packed.group(0)}: {packed.group(1)} divides "
+                       "n_buckets=16, so every task holds whole buckets, the same number each")
+    else:
+        failures.append("merge resolve: Exchange is not hashpartitioning(repo, path, P) "
+                        f"with P dividing n_buckets: {exchanges}")
     if "WindowGroupLimit" in p3:
         checks3.append("OK WindowGroupLimit: Catalyst turns rn=1 into a top-1-per-key "
                        "pre-filter before the full sort")
+    else:
+        failures.append("merge resolve: no WindowGroupLimit")
     sections.append(("CDC merge resolve: one shuffle total", p3, checks3))
 
     # 4. latest-wins aggregate (query path) -> partial aggregation
